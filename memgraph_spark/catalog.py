@@ -16,6 +16,8 @@ the source fact table scan.
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,6 +53,49 @@ def node_id(label: str, key_col) -> F.Column:
     """Global node id as a column expression (no lookup table, no shuffle)."""
     code = register_label(label)
     return (F.lit(code * (1 << KEY_BITS)) + key_col.cast("long")).alias("id")
+
+
+class ReadWriteLock:
+    """Writer-preferring shared/exclusive lock.
+
+    Readers share it; a writer waits for the readers in flight, and while a
+    writer waits, newly arriving readers queue behind it, so a stream of
+    reads cannot starve a write. Not reentrant."""
+
+    def __init__(self) -> None:
+        self._cond = threading.Condition()
+        self._readers = 0
+        self._writer = False
+        self._writers_waiting = 0
+
+    @contextmanager
+    def shared(self):
+        with self._cond:
+            while self._writer or self._writers_waiting:
+                self._cond.wait()
+            self._readers += 1
+        try:
+            yield
+        finally:
+            with self._cond:
+                self._readers -= 1
+                if not self._readers:
+                    self._cond.notify_all()
+
+    @contextmanager
+    def exclusive(self):
+        with self._cond:
+            self._writers_waiting += 1
+            while self._writer or self._readers:
+                self._cond.wait()
+            self._writers_waiting -= 1
+            self._writer = True
+        try:
+            yield
+        finally:
+            with self._cond:
+                self._writer = False
+                self._cond.notify_all()
 
 
 @dataclass
@@ -99,6 +144,15 @@ class PropertyGraph:
     # scheme: user-supplied table swaps and cross-table label moves land
     # here; SET's per-label pruning must probe these instead of code-testing
     _mixed_id_labels: set = field(default_factory=set, repr=False)
+    # admission of whole statements: read-only ones share it, everything
+    # else runs alone (the Bolt server takes it around each RUN's compile)
+    run_lock: ReadWriteLock = field(default_factory=ReadWriteLock,
+                                    repr=False, compare=False)
+    # single-flight for the lazy caches below: concurrent readers must not
+    # both build and persist the same frame. Reentrant, because one build
+    # may read another cache (adjacency_vertices builds through adjacency).
+    _cache_lock: threading.RLock = field(default_factory=threading.RLock,
+                                         repr=False, compare=False)
 
     def __post_init__(self) -> None:
         # constructor-supplied node tables carry arbitrary ids (the Bolt
@@ -131,17 +185,19 @@ class PropertyGraph:
         from memgraph_spark.search.text_index import (
             build_text_index, index_stats)
         key = (table, id_col, text_col)
-        if key not in self._text_index_cache:
-            df = self.tables[table]
-            idx = build_text_index(df, id_col, text_col) \
-                .localCheckpoint(eager=True)
-            self._text_index_cache[key] = (idx, index_stats(df, idx))
-        return self._text_index_cache[key]
+        with self._cache_lock:
+            if key not in self._text_index_cache:
+                df = self.tables[table]
+                idx = build_text_index(df, id_col, text_col) \
+                    .localCheckpoint(eager=True)
+                self._text_index_cache[key] = (idx, index_stats(df, idx))
+            return self._text_index_cache[key]
 
     def label_count(self, label: str) -> int:
-        if label not in self._count_cache:
-            self._count_cache[label] = self.nodes[label].count()
-        return self._count_cache[label]
+        with self._cache_lock:
+            if label not in self._count_cache:
+                self._count_cache[label] = self.nodes[label].count()
+            return self._count_cache[label]
 
     def total_node_count(self) -> int:
         return sum(self.label_count(lbl) for lbl in self.nodes)
@@ -267,32 +323,36 @@ class PropertyGraph:
         input of expand_variable/named-path traversals (built once per
         (etype, direction), invalidated on writes, like `adjacency`)."""
         key = (etype, direction)
-        if key not in self._eid_cache:
-            from memgraph_spark.operators.expand import _edges_with_eid
-            self._eid_cache[key] = _edges_with_eid(self, etype, direction) \
-                .persist()
-        return self._eid_cache[key]
+        with self._cache_lock:
+            if key not in self._eid_cache:
+                from memgraph_spark.operators.expand import _edges_with_eid
+                self._eid_cache[key] = _edges_with_eid(
+                    self, etype, direction).persist()
+            return self._eid_cache[key]
 
     def adjacency(self, etype: str | None, direction: str = "out") -> DataFrame:
         """Deduped, persisted (src, dst) list oriented for traversal —
         the shared 'adjacency index' every iterative operator re-joins.
         Materialized once per (etype, direction); reused across queries."""
         key = (etype, direction)
-        if key not in self._adj_cache:
-            edges = self.edge(etype) if etype else self.all_edges()
-            out = edges.select("src", "dst")
-            inn = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            df = {"out": out, "in": inn}.get(direction, out.unionAll(inn))
-            # hash(src) layout at no extra cost: HashPartitioning(src)
-            # satisfies the dedup aggregate's ClusteredDistribution(src,
-            # dst), so the dedup rides this single exchange — and every
-            # frontier join on src past the broadcast fence reuses the
-            # cached layout instead of re-shuffling the O(E) frame per
-            # round (measured 0.57x on the 5M-edge skew graph for WCC's
-            # identical join shape).
-            self._adj_cache[key] = df.repartition("src").dropDuplicates() \
-                .persist()
-        return self._adj_cache[key]
+        with self._cache_lock:
+            if key not in self._adj_cache:
+                edges = self.edge(etype) if etype else self.all_edges()
+                out = edges.select("src", "dst")
+                inn = edges.select(F.col("dst").alias("src"),
+                                   F.col("src").alias("dst"))
+                df = {"out": out, "in": inn}.get(direction,
+                                                 out.unionAll(inn))
+                # hash(src) layout at no extra cost: HashPartitioning(src)
+                # satisfies the dedup aggregate's ClusteredDistribution(src,
+                # dst), so the dedup rides this single exchange — and every
+                # frontier join on src past the broadcast fence reuses the
+                # cached layout instead of re-shuffling the O(E) frame per
+                # round (measured 0.57x on the 5M-edge skew graph for WCC's
+                # identical join shape).
+                self._adj_cache[key] = df.repartition("src") \
+                    .dropDuplicates().persist()
+            return self._adj_cache[key]
 
     def adjacency_vertices(self, etype: str | None = None,
                            direction: str = "out") -> DataFrame:
@@ -304,13 +364,14 @@ class PropertyGraph:
         `key[0] in (etype, None)`, so any other arrangement would leave a
         permanently stale vertex set after the first edge write."""
         key = (etype, "__verts__", direction)
-        if key not in self._adj_cache:
-            adj = self.adjacency(etype, direction)
-            self._adj_cache[key] = (
-                adj.select(F.col("src").alias("id"))
-                .unionAll(adj.select(F.col("dst").alias("id")))
-                .dropDuplicates().persist())
-        return self._adj_cache[key]
+        with self._cache_lock:
+            if key not in self._adj_cache:
+                adj = self.adjacency(etype, direction)
+                self._adj_cache[key] = (
+                    adj.select(F.col("src").alias("id"))
+                    .unionAll(adj.select(F.col("dst").alias("id")))
+                    .dropDuplicates().persist())
+            return self._adj_cache[key]
 
     # -- schema surface (SHOW SCHEMA INFO parity: schema is observed) -------
     def labels(self) -> list[str]:

@@ -194,6 +194,8 @@ def simhash(text: Column, bits: int = 64) -> Column:
     pinned by tests/test_llm.py::test_simhash_arrow_equals_column_build.
     Set SPARK_GRAFT_SIMHASH_JVM=1 to force the pure-column build
     (environments without Python workers)."""
+    if not 1 <= bits <= 64:
+        raise ValueError(f"bits must be in [1, 64], got {bits}")
     if os.environ.get("SPARK_GRAFT_SIMHASH_JVM"):
         return simhash_column_build(text, bits)
     tokens = F.filter(F.split(text, r"\s+"), lambda t: t != "")
@@ -206,10 +208,6 @@ def _simhash_votes_arrow(hashes: Column, bits: int = 64) -> Column:
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
-
-    if not 1 <= bits <= 64:
-        raise ValueError(f"bits must be in [1, 64], got {bits}")
-    n_bits = bits
 
     @pandas_udf("long")
     def _vote(hs):
@@ -235,7 +233,7 @@ def _simhash_votes_arrow(hashes: Column, bits: int = 64) -> Column:
             # documents (10k rows x 1k tokens ≈ 0.6 GB, not 5 GB).
             bmat = np.unpackbits(
                 flat.view(np.uint8).reshape(total, 8), axis=1,
-                bitorder="little")[:, :n_bits]           # total x bits, uint8
+                bitorder="little")[:, :bits]             # total x bits, uint8
             nz = lens > 0
             starts = np.zeros(n, dtype=np.int64)
             np.cumsum(lens[:-1], out=starts[1:])
@@ -244,7 +242,7 @@ def _simhash_votes_arrow(hashes: Column, bits: int = 64) -> Column:
             votes = 2 * ones - lens[nz, None]            # sum of (2b - 1)
             sel = votes > 0                              # strict, as when()
             weights = np.left_shift(
-                np.uint64(1), np.arange(n_bits, dtype=np.uint64))
+                np.uint64(1), np.arange(bits, dtype=np.uint64))
             packed[nz] = (sel.astype(np.uint64) * weights).sum(
                 axis=1, dtype=np.uint64)
         return pd.Series(packed.astype(np.int64))

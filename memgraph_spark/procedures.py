@@ -9,7 +9,8 @@ and the DataFrame body is the distributed implementation (algos/, llm/).
 Vertex-valued yields are node ids (join back on the nodes tables for
 properties), matching our id-based frame representation.
 
-register() is the mgp.add_read_proc equivalent for user modules.
+register() is the mgp.add_read_proc / add_write_proc equivalent for user
+modules: read_only=True declares a procedure that only reads the graph.
 """
 
 from __future__ import annotations
@@ -38,6 +39,10 @@ PROCEDURES: dict[str, Callable[..., DataFrame]] = {}
 # reference's mgp signature machinery) and VOID passthrough semantics
 SIGNATURES: dict[str, dict] = {}
 
+# procedures declared read-only at registration: a statement whose CALLs
+# are all in this set may run alongside other reads (plans/access.py)
+READ_ONLY: set[str] = set()
+
 
 class NotVectorizable(Exception):
     """Raised by a VECTORIZED handler to decline a join-compiled run; the
@@ -55,18 +60,25 @@ VECTORIZED: dict[str, Callable[..., DataFrame]] = {}
 
 
 def register(name: str, fn: Callable[..., DataFrame],
-             signature: dict | None = None) -> None:
-    """mgp-style registration (include/mgp.py add_read_proc parity)."""
-    PROCEDURES[name.lower()] = fn
+             signature: dict | None = None, read_only: bool = False) -> None:
+    """mgp-style registration (include/mgp.py add_read_proc parity).
+    Only a procedure that never changes the graph may set read_only."""
+    key = name.lower()
+    PROCEDURES[key] = fn
     if signature is not None:
-        SIGNATURES[name.lower()] = signature
+        SIGNATURES[key] = signature
     else:
-        SIGNATURES.pop(name.lower(), None)
+        SIGNATURES.pop(key, None)
+    if read_only:
+        READ_ONLY.add(key)
+    else:
+        READ_ONLY.discard(key)
 
 
 def unregister(name: str) -> None:
     PROCEDURES.pop(name.lower(), None)
     SIGNATURES.pop(name.lower(), None)
+    READ_ONLY.discard(name.lower())
 
 
 def _edges(g, etype=None):
@@ -1633,7 +1645,7 @@ register("vector_search.search", _vector_search)
 register("vector_search.show_index_info", _vector_show_index_info)
 register("vector_search.search_edges", _vector_search_edges)
 register("import_util.json", _import_json)
-register("text_search.search", _text_search)
+register("text_search.search", _text_search, read_only=True)
 register("text_search.search_all", _text_search_indexed)
 register("text_search.regex_search", _text_regex)
 register("text_search.fuzzy_search", _text_fuzzy)

@@ -20,6 +20,7 @@ import socketserver
 import struct
 import threading
 
+from memgraph_spark.plans.access import is_read_only
 from memgraph_spark.server import packstream as ps
 
 # message tags (published Bolt spec; codes.hpp parity)
@@ -298,14 +299,17 @@ class _RowStream:
 
 
 class _Session:
-    """Per-connection state machine (SessionHL parity)."""
+    """Per-connection state machine (SessionHL parity).
 
-    # one writer at a time across ALL connections: concurrent RUNs would
-    # race on the shared PropertyGraph's table versions and id allocators
-    # (read-modify-write on g.nodes, _key_seq/_eid_seq) — the reference
-    # serializes conflicting write transactions the same way
-    import threading as _threading
-    _run_lock = _threading.Lock()
+    Each RUN compiles under its graph's run lock (PropertyGraph.run_lock):
+    shared when plans.access classifies the statement read-only, exclusive
+    otherwise. Reads on any number of connections compile at once, each
+    against the table versions current when it starts; a write runs alone,
+    since it does read-modify-write on the graph's table versions and id
+    allocators (g.nodes, _key_seq/_eid_seq). The lock prefers writers, so
+    a stream of reads cannot starve a write. The lock is per graph:
+    sessions on different databases never wait for each other. Rows
+    stream to the client after the lock is released."""
 
     def __init__(self, graph_session, sock, version):
         self.gs = graph_session
@@ -385,7 +389,9 @@ class _Session:
             query = msg.fields[0]
             params = msg.fields[1] if len(msg.fields) > 1 else {}
             try:
-                with _Session._run_lock:
+                lock = self.gs.graph.run_lock
+                with (lock.shared() if is_read_only(query)
+                      else lock.exclusive()):
                     df = self.gs.execute(query, params or {})
                 self.fields = list(df.columns)
                 kinds = getattr(self.gs, "last_kinds", {}) or {}

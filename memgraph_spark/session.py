@@ -87,6 +87,12 @@ def get_spark(app_name: str = "memgraph-spark", cpus: int | str | None = None) -
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # no call-site capture: with it on, every DataFrame/Column call
+        # pays about 5 py4j round trips and a Python stack walk, all under
+        # the GIL, to tag plan nodes for error messages. A Cypher compile
+        # makes hundreds of such calls, and concurrent compiles contend
+        # on exactly this work.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()

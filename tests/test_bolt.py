@@ -5,6 +5,8 @@ the same bytes the official drivers emit."""
 
 import socket
 import struct
+import threading
+import time
 
 import pytest
 
@@ -394,3 +396,149 @@ def test_discard_half_pulled_stream_closes_iterator(server):
         sock.close()
     finally:
         B._RowStream.close = orig_close
+
+
+# -- concurrency: reads share the graph's run lock, writes take it alone ----
+
+@pytest.fixture()
+def rw_server(spark):
+    """A server on its own graph, so the writes below leave the shared
+    fixture graph untouched."""
+    g = PropertyGraph(
+        spark,
+        nodes={"P": spark.createDataFrame(
+            [(1, "ana"), (2, "bob")], "id long, name string")})
+    srv = BoltServer(g, port=0).start()
+    yield srv
+    srv.stop()
+
+
+def _run_all(sock, query, params=None):
+    """RUN + PULL all; the RUN reply's tag and the records."""
+    resp = _roundtrip(sock, RUN, query, params or {}, {})
+    if resp.tag != SUCCESS:
+        return resp.tag, []
+    write_message(sock, PULL, {"n": -1})
+    records = []
+    while True:
+        msg = read_message(sock)
+        if msg.tag != RECORD:
+            return msg.tag, records
+        records.append(msg.fields[0])
+
+
+def _spy_execute(monkeypatch, hook):
+    """Calls hook(query) inside every GraphSession.execute, under the
+    run lock the Bolt server took for it."""
+    from memgraph_spark.plans import GraphSession
+    orig = GraphSession.execute
+
+    def execute(self, query, params=None):
+        hook(query)
+        return orig(self, query, params)
+    monkeypatch.setattr(GraphSession, "execute", execute)
+
+
+def _in_threads(*fns):
+    """Starts one thread per fn; results[i] gets fn i's return value."""
+    results = [None] * len(fns)
+
+    def run(i, fn):
+        results[i] = fn()
+    threads = [threading.Thread(target=run, args=(i, fn), daemon=True)
+               for i, fn in enumerate(fns)]
+    for t in threads:
+        t.start()
+    return threads, results
+
+
+def _join(threads, timeout=120):
+    for t in threads:
+        t.join(timeout)
+    assert not any(t.is_alive() for t in threads)
+
+
+def test_reads_on_two_connections_execute_together(rw_server, monkeypatch):
+    """Two read-only RUNs are inside GraphSession.execute at the same time:
+    each waits at a 2-party barrier there, which only passes when neither
+    RUN holds the lock alone."""
+    barrier = threading.Barrier(2, timeout=30)
+    _spy_execute(monkeypatch, lambda q: barrier.wait())
+    socks = [_login(rw_server) for _ in range(2)]
+    query = "MATCH (p:P) RETURN p.name AS name ORDER BY name"
+    threads, results = _in_threads(*[(lambda s=s: _run_all(s, query))
+                                     for s in socks])
+    _join(threads)
+    assert results == [(SUCCESS, [["ana"], ["bob"]])] * 2
+    for s in socks:
+        s.close()
+
+
+def test_write_waits_for_reads_and_blocks_later_reads(rw_server,
+                                                      monkeypatch):
+    """Writer preference: a CREATE waits for the read in flight, and a read
+    that arrives while the CREATE waits runs after it, not before."""
+    read1, write, read2 = ("RETURN 1 AS first", "CREATE (:T {v: 1})",
+                           "RETURN 2 AS second")
+    lock = rw_server.graph.run_lock
+    entered, first_in, release = [], threading.Event(), threading.Event()
+
+    def hook(query):
+        entered.append(query)
+        if query == read1:
+            first_in.set()
+            assert release.wait(30)
+    _spy_execute(monkeypatch, hook)
+    s_read1, s_write, s_read2 = (_login(rw_server) for _ in range(3))
+
+    t1, r1 = _in_threads(lambda: _run_all(s_read1, read1))
+    assert first_in.wait(30)
+    tw, rw = _in_threads(lambda: _run_all(s_write, write))
+    deadline = time.monotonic() + 30
+    while lock._writers_waiting == 0 and time.monotonic() < deadline:
+        time.sleep(0.01)
+    assert lock._writers_waiting == 1
+    t2, r2 = _in_threads(lambda: _run_all(s_read2, read2))
+    time.sleep(0.5)
+    assert entered == [read1]      # the CREATE and the late read both wait
+    release.set()
+    _join(t1 + tw + t2)
+    assert entered == [read1, write, read2]
+    assert (r1, rw, r2) == ([(SUCCESS, [[1]])], [(SUCCESS, [])],
+                            [(SUCCESS, [[2]])])
+    for s in (s_read1, s_write, s_read2):
+        s.close()
+
+
+def test_creates_interleaved_with_reads_match_the_tally(rw_server):
+    """CREATEs on one connection while another connection keeps counting:
+    no read sees more CREATEs than were made or fewer than the read
+    before it, and at the end the graph holds exactly the writer's tally."""
+    n_writes = 8
+    writer, reader = _login(rw_server), _login(rw_server)
+    done = []
+
+    def write():
+        try:
+            return [_run_all(writer, "CREATE (:W {i: $i})", {"i": i})
+                    for i in range(n_writes)]
+        finally:
+            done.append(True)
+
+    def read():
+        seen = []
+        while not done:
+            seen.append(_run_all(reader, "MATCH (w:W) RETURN count(w) AS n"))
+        return seen
+
+    threads, results = _in_threads(write, read)
+    _join(threads)
+    wrote, seen = results
+    assert wrote == [(SUCCESS, [])] * n_writes
+    counts = [records[0][0] for tag, records in seen if tag == SUCCESS]
+    assert len(counts) == len(seen) > 0
+    assert counts == sorted(counts) and counts[-1] <= n_writes
+    assert _run_all(reader, "MATCH (w:W) RETURN w.i AS i ORDER BY i") == \
+        (SUCCESS, [[i] for i in range(n_writes)])
+    writer.close()
+    reader.close()

@@ -413,3 +413,15 @@ def test_simhash_narrow_bits_matches_column_build(spark):
             a, b = (r["a"] or 0), (r["b"] or 0)
             assert a == b, (bits, r["doc_id"], a, b)
             assert 0 <= a < (1 << bits), (bits, a)
+
+
+@pytest.mark.parametrize("jvm", ["", "1"])
+@pytest.mark.parametrize("bits", [0, -1, 65])
+def test_simhash_rejects_bits_out_of_range(spark, monkeypatch, jvm, bits):
+    """bits outside [1, 64] is refused on the Arrow path and on the
+    SPARK_GRAFT_SIMHASH_JVM=1 column-build path alike."""
+    from memgraph_spark.llm.dedup import simhash
+
+    monkeypatch.setenv("SPARK_GRAFT_SIMHASH_JVM", jvm)
+    with pytest.raises(ValueError, match="bits must be in"):
+        simhash(F.col("text"), bits=bits)
